@@ -9,3 +9,9 @@ Arrow-fed pandas UDFs — no per-row Python on the hot path.
 """
 
 __version__ = "0.1.0"
+
+# every engine UDF a Spark Python worker unpickles imports this package, so
+# this reaches every engine stage: see zipstamp for the per-task cost it cuts
+from gdelta_spark import zipstamp as _zipstamp
+
+_zipstamp.install()

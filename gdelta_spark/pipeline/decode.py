@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 
 from gdelta_spark import blocks
 from gdelta_spark.codecs.delta import tokens_to_bytes
+from gdelta_spark.pipeline import partitioning
 
 DECODED_SCHEMA = "doc_id string, tok_bytes binary"
 
@@ -54,14 +55,8 @@ def _decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
 def decode_tokens_bytes(blocks_df: DataFrame) -> DataFrame:
     """blocks -> (doc_id, tok_bytes binary): binary stays binary through the
     Arrow boundary (the array<int> path is ~50x slower, see serde.py)."""
-    # explicit kernel-stage partition count, exempt from AQE coalescing —
-    # same rationale as the encode side (pipeline/encode.py): Python
-    # kernels want many small partitions, not JVM-sized ones
-    n_kernel = int(
-        blocks_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
     return (
-        blocks_df.repartition(n_kernel, "part_id")
+        partitioning.by_part(blocks_df)
         .groupBy("part_id")
         .applyInPandas(_decode_group, schema=DECODED_SCHEMA)
     )

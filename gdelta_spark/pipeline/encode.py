@@ -325,18 +325,8 @@ def encode_blocks_bin(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _encode_group(pdf, force_codec=force_codec)
 
-    # explicit partition count for the kernel exchange: the Python encode
-    # kernel runs at ~0.05 GB/s/core, so its stage wants MANY partitions,
-    # while AQE's size-based coalescing (tuned for JVM stages) would merge
-    # this shuffle to a handful of tasks and serialize the kernel. A
-    # user-specified repartition count is exempt from AQE coalescing, and
-    # groupBy on the same key reuses the partitioning (no second exchange).
-    n_kernel = int(
-        salted.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
     return (
-        salted.select("part_id", "doc_id", "tok_bytes")
-        .repartition(n_kernel, "part_id")
+        partitioning.by_part(salted.select("part_id", "doc_id", "tok_bytes"))
         .groupBy("part_id")
         .applyInPandas(kernel, schema=BLOCKS_SCHEMA)
     )

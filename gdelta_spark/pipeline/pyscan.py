@@ -22,6 +22,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gdelta_spark.pipeline.serde import (
@@ -47,14 +48,36 @@ def _plan_splits(path: str) -> list[tuple[str, int]]:
     return splits
 
 
+def split_table(spark: SparkSession, splits: list[tuple[str, int]]) -> DataFrame:
+    """One (path, rg) split per partition, split i in partition i.
+
+    ``spark.range`` places id i alone in partition i; the split rows join
+    onto it as a broadcast, which keeps the range's partitioning, so no
+    exchange runs. Hashing (path, rg) into n partitions instead gives some
+    tasks two splits and others none, in a layout that changes with the
+    path. The split table goes through pandas/Arrow, which needs no Python
+    worker job, and reaches the tasks once per executor, not in every
+    task's closure."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "id": range(len(splits)),
+            "path": [p for p, _ in splits],
+            "rg": [rg for _, rg in splits],
+        }
+    )
+    table = spark.createDataFrame(pdf, "id long, path string, rg int")
+    ids = spark.range(len(splits), numPartitions=len(splits))
+    return ids.join(F.broadcast(table), "id").select("path", "rg")
+
+
 def scan_tokens_binary(spark: SparkSession, path: str) -> DataFrame:
     """Parquet tokens table -> DataFrame(doc_id, n_tok, source, tok_bytes)."""
     splits = _plan_splits(path)
     if not splits:
         raise FileNotFoundError(f"no parquet row groups under {path}")
-    sdf = spark.createDataFrame(splits, "path string, rg int").repartition(
-        len(splits), "path", "rg"
-    )
+    sdf = split_table(spark, splits)
 
     def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq

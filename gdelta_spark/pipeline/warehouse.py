@@ -464,8 +464,10 @@ def encode_and_commit(
         )
 
     summary_df = (
-        work.select(
-            "part_id", "key_hash", "key_sum", "input_rows", "doc_id", "tok_bytes"
+        partitioning.by_part(
+            work.select(
+                "part_id", "key_hash", "key_sum", "input_rows", "doc_id", "tok_bytes"
+            )
         )
         .groupBy("part_id")
         .applyInPandas(

@@ -1,11 +1,20 @@
 """Oracle-anchored tests for the gdelta delta codec.
 
-Mirrors the reference's own round-trip strategy (/root/reference/test.sh:8-24)
+Mirrors the reference's own round-trip strategy (its test.sh round trip)
 and extends it: cross-decodability in both directions, size <= reference
 (the north-rule bar), and byte-exact blob parity on every regime we generate.
+
+The C++ comparisons (``test_oracle_parity``) run only where the reference
+binary can be built (see ``conftest.ref_gdelta``) and skip otherwise. Without
+it, C++ parity stays pinned by the golden blobs (``test_golden_blobs.py``,
+captured while parity was enforced) and by the group-vs-single encoder
+differential (``test_gdelta_group.py``). The text-diff pair below is two of
+the codec's own source files, so every case builds from in-repo bytes.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -40,12 +49,13 @@ def _mutate(base: bytes, n_edits: int) -> bytes:
 
 
 def _cases() -> list[tuple[str, bytes, bytes]]:
-    cpp = open("/root/reference/gdelta.cpp", "rb").read()
-    hdr = open("/root/reference/gdelta.h", "rb").read()
+    codecs = Path(__file__).resolve().parent.parent / "gdelta_spark" / "codecs"
+    single = (codecs / "gdelta_codec.py").read_bytes()
+    group = (codecs / "gdelta_group.py").read_bytes()
     blob = _rand_bytes(5000)
     cases = [
-        ("ref-pair-fwd", cpp, hdr),
-        ("ref-pair-rev", hdr, cpp),
+        ("src-pair-fwd", single, group),
+        ("src-pair-rev", group, single),
         ("identical", blob, blob),
         ("empty-target", blob, b""),
         ("empty-base", b"", blob),

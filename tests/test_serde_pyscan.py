@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from gdelta_spark.pipeline import generator, serde
-from gdelta_spark.pipeline.pyscan import scan_tokens_binary
+from gdelta_spark.pipeline.pyscan import _plan_splits, scan_tokens_binary, split_table
 from gdelta_spark.pipeline.serde import _binary_chunk_to_list, _list_chunk_to_binary
 
 
@@ -52,6 +52,31 @@ def test_pyscan_matches_jvm_scan(spark, tmp_path):
     h1 = ser.select(F.expr("bit_xor(xxhash64(doc_id, tok_bytes))").alias("h")).collect()[0]["h"]
     h2 = py.select(F.expr("bit_xor(xxhash64(doc_id, tok_bytes))").alias("h")).collect()[0]["h"]
     assert h1 == h2
+
+
+def test_split_table_places_split_i_alone_in_partition_i(spark):
+    # 8 splits hashed into 8 partitions left some tasks two and some none
+    splits = [(f"/w/run-{i // 2}/part-{i:05d}.parquet", i % 2) for i in range(8)]
+    df = split_table(spark, splits)
+    assert df.rdd.getNumPartitions() == len(splits)
+    got = df.select(F.spark_partition_id().alias("p"), "path", "rg").collect()
+    assert sorted((r.p, r.path, r.rg) for r in got) == [
+        (i, p, rg) for i, (p, rg) in enumerate(splits)
+    ]
+
+
+def test_pyscan_one_split_per_task(spark, tmp_path):
+    path = str(tmp_path / "tokens")
+    generator.write_tokens_table(spark, path, rows_per_regime=8, num_partitions=3)
+    splits = _plan_splits(path)
+    py = scan_tokens_binary(spark, path)
+    assert py.rdd.getNumPartitions() == len(splits)
+    # each task emits exactly the rows of its one row group
+    per_task = py.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    jvm = spark.read.parquet(path).groupBy(F.input_file_name().alias("f")).count()
+    assert sorted(r["count"] for r in per_task) == sorted(
+        r["count"] for r in jvm.collect()
+    )
 
 
 def test_pyscan_missing_path(spark):
